@@ -1,17 +1,14 @@
-"""Per-turn mention detection + triple extraction.
+"""Per-turn mention detection.
 
 The analog of GUAC's parser registry (/root/reference/pkg/ingestor/parser/
 parser.go:42-56): each parser there is a pure function blob -> predicates;
-here each turn's `text` maps to (subj, pred, obj) surface candidates under a
-closed mention grammar (corpus.py). Two interchangeable engines:
-
-  * engine='arrow'  — mapInPandas batch extractor (the north-rule shape:
-    vectorized pandas/Arrow UDFs, no per-row Python loops; pandas .str ops
-    over whole Arrow batches).
-  * engine='sql'    — pure JVM path: F.regexp_extract_all + explode, stays
-    inside whole-stage codegen. Semantically identical (tests assert it);
-    at 100 TB this path avoids the Arrow transfer entirely, so the pipeline
-    exposes both and bench.py measures them against each other.
+here each turn's `text` maps to (kind, surface, span) mention rows under a
+closed mention grammar (corpus.py). There is one extractor: a pure JVM
+projection (F.regexp_extract_all + explode) that stays inside whole-stage
+codegen, so no row crosses into Python (a Python extractor over Arrow
+batches measured 81.5 s vs 47.9 s for this scan on 25.6M turns at
+local[4]).
+assemble.triples_final turns the linked mentions into triples.
 
 Stable (conv_id, turn_idx) ordering is preserved by keying every emission
 with (conv_id, turn_idx); no operator here depends on partition order.
@@ -19,20 +16,16 @@ with (conv_id, turn_idx); no operator here depends on partition order.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# mention grammar — shared by both engines and by the DuckDB oracle.
-# Keep to the regex subset with identical semantics in java.util.regex,
-# RE2 (DuckDB), and Python re: char classes + single groups.
+# mention grammar — shared by the extractor and by the DuckDB oracle.
+# Keep to the regex subset with identical semantics in java.util.regex
+# and RE2 (DuckDB): char classes + single groups.
 # boundary before '@' (start-of-text or non-alphanumeric, via a
 # non-capturing alternative — RE2/DuckDB has no lookbehind) so the '@vN'
 # version suffix of a tool surface ('tool:vec_db@v2') cannot fabricate a
-# spurious person mention 'v' (ADVICE r3); all three engines (java.util
-# .regex, RE2, Python re) agree on this subset
+# spurious person mention 'v' (ADVICE r3)
 PERSON_RE = r"(?:^|[^a-z0-9])@([a-z][a-z-]*)"
 TOPIC_RE = r"#(topic_[0-9]+)"
 # optional '@vN' version suffix: the qualifier level of the tool identity
@@ -58,16 +51,6 @@ MENTION_PATTERNS: list[tuple[str, str]] = [
 # ~15% off the fused extraction scan at sf1.0 (r7, sym-diff 0).
 KIND_GATE = {"topic": "#topic_", "tool": "tool:", "reply": ">>"}
 
-
-def _gated_arr(kind: str, pat: str):
-    arr = surface_span_arr(pat, MARKER_PREFIX[kind])
-    gate = KIND_GATE.get(kind)
-    if gate is None:
-        return arr
-    return F.when(F.col("text").contains(gate), arr).otherwise(
-        F.array().cast("array<struct<s: string, sp: int>>")
-    )
-
 # literal marker prefix per mention kind — marker = prefix || surface is the
 # exact text the rule matched, so span = instr(text, marker) is the 1-based
 # position of the mention's FIRST occurrence in the turn. span is the typed
@@ -75,13 +58,6 @@ def _gated_arr(kind: str, pat: str):
 # into the edge attrs map and into edge identity exactly like the
 # reference's parse-time typed fields (graph_builder.go:62-156).
 MARKER_PREFIX = {"person": "@", "topic": "#", "tool": "tool:", "reply": ">>"}
-
-MENTIONS_SCHEMA = (
-    "conv_id string, turn_idx int, kind string, surface string, span int"
-)
-AKA_SCHEMA = (
-    "conv_id string, turn_idx int, surface_a string, surface_b string"
-)
 
 # predicate vocabulary (FIXTURES.md §3) — the analog of GUAC's 17 verb types
 # (/root/reference/pkg/assembler/assembler.go:31-49)
@@ -92,91 +68,9 @@ PRED_BY_KIND = {
     "reply": "replies_to",
 }
 
-
-def _extract_mentions_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        outs = []
-        for kind, pat in MENTION_PATTERNS:
-            found = pdf["text"].str.findall(pat)
-            e = pdf[["conv_id", "turn_idx"]].copy()
-            e["kind"] = kind
-            e["surface"] = found
-            e = e.explode("surface")
-            e = e[e["surface"].notna()]
-            e["surface"] = e["surface"].astype(str)
-            # explode preserves the source index, so pdf.loc[e.index]
-            # realigns each mention with its turn text; str.find has no
-            # per-row-needle vectorized form — the zip loop is the parity
-            # reference only (engine='sql' is the shipped hot path)
-            pfx = MARKER_PREFIX[kind]
-            e["span"] = [
-                t.find(pfx + s) + 1
-                for t, s in zip(pdf.loc[e.index, "text"], e["surface"])
-            ]
-            outs.append(e[["conv_id", "turn_idx", "kind", "surface", "span"]])
-        out = pd.concat(outs, ignore_index=True)
-        out["span"] = out["span"].astype("int32")
-        yield out
-
-
-def _extract_aka_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        pdf = pdf[pdf["text"].str.contains(" aka @", regex=False)]
-        found = pdf["text"].str.findall(AKA_RE)
-        e = pdf[["conv_id", "turn_idx"]].copy()
-        e["pair"] = found
-        e = e.explode("pair")
-        e = e[e["pair"].notna()]
-        if len(e):
-            e["surface_a"] = e["pair"].str[0]
-            e["surface_b"] = e["pair"].str[1]
-        else:
-            e["surface_a"] = pd.Series(dtype=str)
-            e["surface_b"] = pd.Series(dtype=str)
-        yield e[["conv_id", "turn_idx", "surface_a", "surface_b"]]
-
-
-def extract_mentions(transcripts: DataFrame, engine: str = "arrow") -> DataFrame:
-    """(conv_id, turn_idx, kind, surface) — one row per mention occurrence."""
-    if engine == "arrow":
-        cols = transcripts.select("conv_id", "turn_idx", "text")
-        return cols.mapInPandas(_extract_mentions_batch, MENTIONS_SCHEMA)
-    if engine == "sql":
-        # one scan: all four patterns evaluated per row, exploded via a
-        # map column (a 4-way union would rescan the table per pattern).
-        # span is computed PRE-explode via transform() while text is in
-        # scope — the exploded rows carry (surface, span) structs, never
-        # a copy of the turn text (carrying text through two explodes
-        # duplicated ~5x the corpus bytes through the stage)
-        kv = []
-        for kind, pat in MENTION_PATTERNS:
-            kv.append(F.lit(kind))
-            kv.append(_gated_arr(kind, pat))
-        return (
-            transcripts.select(
-                "conv_id",
-                "turn_idx",
-                F.explode(F.create_map(*kv)).alias("kind", "arr"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.explode("arr").alias("e"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.col("e.s").alias("surface"),
-                F.col("e.sp").alias("span"),
-            )
-        )
-    raise ValueError(f"unknown engine {engine!r}")
+# joins the two aka capture groups into one string so the aka arm shares
+# the mention arms' struct shape; cannot occur in surfaces ([a-z-_@v0-9])
+_AKA_SEP = "\x01"
 
 
 def surface_span_arr(pat: str, prefix: str):
@@ -210,172 +104,95 @@ def surface_span_arr(pat: str, prefix: str):
     )
 
 
-FUSED_SCHEMA = MENTIONS_SCHEMA + ", surface_b string"
-# joins the two aka capture groups into one string for the sql engine's
-# map-of-arrays explode; cannot occur in surfaces ([a-z-_@v0-9] only)
-_AKA_SEP = "\x01"
+def _gated(marker: str, arr: Column) -> Column:
+    """arr on rows whose text contains `marker`, an empty array elsewhere."""
+    return F.when(F.col("text").contains(marker), arr).otherwise(
+        F.array().cast("array<struct<s: string, sp: int>>")
+    )
 
 
-def extract_mentions_fused(
-    transcripts: DataFrame, engine: str = "arrow"
+def _mention_arms() -> list[tuple[str, Column]]:
+    arms = []
+    for kind, pat in MENTION_PATTERNS:
+        arr = surface_span_arr(pat, MARKER_PREFIX[kind])
+        gate = KIND_GATE.get(kind)
+        arms.append((kind, arr if gate is None else _gated(gate, arr)))
+    return arms
+
+
+def _aka_arm() -> tuple[str, Column]:
+    # cheap substring prefilter: most turns have no aka pattern, so gate
+    # the two regex passes behind contains(). ALL non-overlapping matches
+    # per turn: the two capture groups are extracted as parallel arrays
+    # and zipped positionally. span is null — an equivalence payload,
+    # not a mention
+    return ("aka", _gated(" aka @", F.zip_with(
+        F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(1)),
+        F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(2)),
+        lambda a, b: F.struct(
+            F.concat(a, F.lit(_AKA_SEP), b).alias("s"),
+            F.lit(None).cast("int").alias("sp"),
+        ),
+    )))
+
+
+def _scan(
+    transcripts: DataFrame, arms: list[tuple[str, Column]]
 ) -> DataFrame:
+    """(conv_id, turn_idx, kind, e: struct<s, sp>) — one row per match.
+
+    One scan: every arm is evaluated per row and exploded via a map
+    column (a union would rescan the table per pattern). span is
+    computed PRE-explode while text is in scope — the exploded rows carry
+    (surface, span) structs, never a copy of the turn text (carrying
+    text through two explodes duplicated ~5x the corpus bytes through
+    the stage)."""
+    kv = [c for kind, arr in arms for c in (F.lit(kind), arr)]
+    return transcripts.select(
+        "conv_id",
+        "turn_idx",
+        F.explode(F.create_map(*kv)).alias("kind", "arr"),
+    ).select("conv_id", "turn_idx", "kind", F.explode("arr").alias("e"))
+
+
+def extract_mentions(transcripts: DataFrame) -> DataFrame:
+    """(conv_id, turn_idx, kind, surface, span) — one row per mention
+    occurrence."""
+    return _scan(transcripts, _mention_arms()).select(
+        "conv_id",
+        "turn_idx",
+        "kind",
+        F.col("e.s").alias("surface"),
+        F.col("e.sp").alias("span"),
+    )
+
+
+def extract_mentions_fused(transcripts: DataFrame) -> DataFrame:
     """ONE corpus scan emitting mention rows AND aka equivalence pairs.
 
     Output = extract_mentions rows (surface_b null) plus kind='aka' rows
-    (surface=left side, surface_b=right side) — engine-parity and
-    fused-vs-separate parity are pytest-pinned. The pipeline writes this
-    superset as the mentions_linked snapshot so the equivalences stage
-    reads back only the tiny aka slice instead of re-scanning the full
-    transcript corpus: at 100 TB that second scan was a whole extra
-    DRAM/IO pass (and the worst-scaling stage of the r2 bench); here it
-    folds into the extraction scan for the cost of one mostly-null
-    column.
+    (surface=left side, surface_b=right side, span null) — pytest-pinned
+    against extract_mentions and the oracle's aka CTE. The pipeline
+    writes this superset as the mentions_linked snapshot so the
+    equivalences stage reads back only the tiny aka slice instead of
+    re-scanning the full transcript corpus: at 100 TB that second scan
+    was a whole extra DRAM/IO pass (and the worst-scaling stage of the
+    r2 bench); here it folds into the extraction scan for the cost of
+    one mostly-null column.
     """
-    if engine == "arrow":
-        cols = transcripts.select("conv_id", "turn_idx", "text")
-        return cols.mapInPandas(_extract_fused_batch, FUSED_SCHEMA)
-    if engine == "sql":
-        kv = []
-        for kind, pat in MENTION_PATTERNS:
-            kv.append(F.lit(kind))
-            kv.append(_gated_arr(kind, pat))
-        kv.append(F.lit("aka"))
-        # cheap substring prefilter: most turns have no aka pattern, so
-        # gate the two regex passes behind contains(). aka entries ride
-        # the same struct shape (span null — equivalence payload, not a
-        # mention), so no text column survives the first explode
-        kv.append(
-            F.when(
-                F.col("text").contains(" aka @"),
-                F.zip_with(
-                    F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(1)),
-                    F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(2)),
-                    lambda a, b: F.struct(
-                        F.concat(a, F.lit(_AKA_SEP), b).alias("s"),
-                        F.lit(None).cast("int").alias("sp"),
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<struct<s: string, sp: int>>"))
-        )
-        return (
-            transcripts.select(
-                "conv_id",
-                "turn_idx",
-                F.explode(F.create_map(*kv)).alias("kind", "arr"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.explode("arr").alias("e"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "kind",
-                F.when(
-                    F.col("kind") == "aka",
-                    F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(1)),
-                )
-                .otherwise(F.col("e.s"))
-                .alias("surface"),
-                F.col("e.sp").alias("span"),
-                F.when(
-                    F.col("kind") == "aka",
-                    F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(2)),
-                ).alias("surface_b"),
-            )
-        )
-    raise ValueError(f"unknown engine {engine!r}")
-
-
-def _extract_fused_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        outs = []
-        for kind, pat in MENTION_PATTERNS:
-            found = pdf["text"].str.findall(pat)
-            e = pdf[["conv_id", "turn_idx"]].copy()
-            e["kind"] = kind
-            e["surface"] = found
-            e = e.explode("surface")
-            e = e[e["surface"].notna()]
-            e["surface"] = e["surface"].astype(str)
-            pfx = MARKER_PREFIX[kind]
-            e["span"] = [
-                t.find(pfx + s) + 1
-                for t, s in zip(pdf.loc[e.index, "text"], e["surface"])
-            ]
-            e["surface_b"] = None
-            outs.append(
-                e[
-                    [
-                        "conv_id", "turn_idx", "kind", "surface", "span",
-                        "surface_b",
-                    ]
-                ]
-            )
-        # cheap substring prefilter mirroring the sql engine: most turns
-        # have no aka pattern, and running the two-group regex over every
-        # row measurably regressed the 25.6M-turn pipeline (r4 interleaved
-        # A/B) — contains() is a vectorized memchr, findall backtracks
-        mask = pdf["text"].str.contains(" aka @", regex=False)
-        cand = pdf[mask]
-        aka = cand["text"].str.findall(AKA_RE)
-        a = cand[["conv_id", "turn_idx"]].copy()
-        a["kind"] = "aka"
-        a["pair"] = aka
-        a = a.explode("pair")
-        a = a[a["pair"].notna()]
-        if len(a):
-            a["surface"] = a["pair"].str[0].astype(str)
-            a["surface_b"] = a["pair"].str[1].astype(str)
-        else:
-            a["surface"] = pd.Series(dtype=str)
-            a["surface_b"] = pd.Series(dtype=str)
-        a["span"] = None
-        outs.append(
-            a[["conv_id", "turn_idx", "kind", "surface", "span", "surface_b"]]
-        )
-        yield pd.concat(outs, ignore_index=True)
-
-
-def extract_aka_pairs(transcripts: DataFrame, engine: str = "arrow") -> DataFrame:
-    """(conv_id, turn_idx, surface_a, surface_b) for '@a aka @b' patterns."""
-    if engine == "arrow":
-        cols = transcripts.select("conv_id", "turn_idx", "text")
-        return cols.mapInPandas(_extract_aka_batch, AKA_SCHEMA)
-    if engine == "sql":
-        # ALL non-overlapping matches per turn, matching the arrow engine's
-        # str.findall semantics exactly (engine-parity tested): extract the
-        # two capture groups as parallel arrays and zip positionally
-        a_arr = F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(1))
-        b_arr = F.regexp_extract_all("text", F.lit(AKA_RE), F.lit(2))
-        return (
-            # cheap substring prefilter before the regex — most turns have
-            # no aka pattern, and contains() is far cheaper than regex
-            transcripts.filter(F.col("text").contains(" aka @"))
-            .select(
-                "conv_id",
-                "turn_idx",
-                a_arr.alias("_aa"),
-                b_arr.alias("_bb"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                F.posexplode("_aa").alias("_i", "surface_a"),
-                "_bb",
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "surface_a",
-                F.element_at("_bb", F.col("_i") + 1).alias("surface_b"),
-            )
-        )
-    raise ValueError(f"unknown engine {engine!r}")
+    is_aka = F.col("kind") == "aka"
+    return _scan(transcripts, _mention_arms() + [_aka_arm()]).select(
+        "conv_id",
+        "turn_idx",
+        "kind",
+        F.when(is_aka, F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(1)))
+        .otherwise(F.col("e.s"))
+        .alias("surface"),
+        F.col("e.sp").alias("span"),
+        F.when(
+            is_aka, F.split_part(F.col("e.s"), F.lit(_AKA_SEP), F.lit(2))
+        ).alias("surface_b"),
+    )
 
 
 def dedupe_staging(transcripts: DataFrame) -> DataFrame:
@@ -386,49 +203,4 @@ def dedupe_staging(transcripts: DataFrame) -> DataFrame:
         transcripts.withColumn("_sha", F.sha2("text", 256))
         .dropDuplicates(["conv_id", "turn_idx", "_sha"])
         .drop("_sha")
-    )
-
-
-def turn_ref(conv_col, idx_col):
-    return F.concat(F.lit("turn:"), conv_col, F.lit(":"), idx_col.cast("string"))
-
-
-def triples_surface(mentions: DataFrame, aka: DataFrame) -> DataFrame:
-    """Raw surface-level triples, pre-linking (the IngestPredicates analog,
-    /root/reference/pkg/assembler/assembler.go:31-49).
-
-    Columns: conv_id, turn_idx, subj_kind, subj, pred, obj_kind, obj.
-    subj_kind 'turn' means subj is a turn ref; 'person' means a surface
-    still to be linked. reply objects are materialized turn refs.
-    """
-    m = mentions.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("turn").alias("subj_kind"),
-        turn_ref(F.col("conv_id"), F.col("turn_idx")).alias("subj"),
-        F.element_at(
-            F.create_map(
-                *[F.lit(x) for kv in PRED_BY_KIND.items() for x in kv]
-            ),
-            F.col("kind"),
-        ).alias("pred"),
-        F.col("kind").alias("obj_kind"),
-        F.when(
-            F.col("kind") == "reply",
-            turn_ref(F.col("conv_id"), F.col("surface").cast("int")),
-        )
-        .otherwise(F.col("surface"))
-        .alias("obj"),
-    )
-    s = aka.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("person").alias("subj_kind"),
-        F.col("surface_a").alias("subj"),
-        F.lit("same_as").alias("pred"),
-        F.lit("person").alias("obj_kind"),
-        F.col("surface_b").alias("obj"),
-    )
-    return m.unionByName(s).dropDuplicates(
-        ["conv_id", "turn_idx", "subj_kind", "subj", "pred", "obj_kind", "obj"]
     )

@@ -73,7 +73,7 @@ mentions AS (
 ),
 aka AS (
   -- ALL non-overlapping matches per turn (parallel unnests zip
-  -- positionally in DuckDB), mirroring extract.py's findall semantics
+  -- positionally in DuckDB), mirroring extract.py's zipped aka arm
   SELECT conv_id, turn_idx,
          unnest(regexp_extract_all(text, '{AKA_RE}', 1)) AS surface_a,
          unnest(regexp_extract_all(text, '{AKA_RE}', 2)) AS surface_b

@@ -8,7 +8,8 @@ stages — the analog of GUAC's ack-after-ingest + blob dedupe):
                                                 \\--> edges
 
 Shuffle budget at scale (the plan we would want on 1000 executors):
-  * extraction: narrow (mapInPandas over the scan, no shuffle).
+  * extraction: narrow (a JVM projection + explode over the scan, no
+    shuffle).
   * head linking: broadcast join, no shuffle of the mention stream.
   * tail linking: shuffles only DISTINCT unmatched surfaces (tiny).
   * CC: iterates over the same_as edge set only (≪ corpus), salted min-agg.
@@ -71,7 +72,6 @@ def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
     warehouse_root: str,
-    engine: str = "auto",
     resume: bool = False,
 ) -> PipelineResult:
     """Run (or resume) the full construction pipeline.
@@ -79,15 +79,6 @@ def run_pipeline(
     With resume=True, stages whose output snapshot is already committed are
     read back instead of recomputed — a killed run restarts exactly from the
     last committed snapshot with no duplicate work.
-
-    engine='auto' picks the pure-JVM 'sql' extraction path at EVERY
-    parallelism: isolated measurement on the 25.6M-turn corpus
-    (scripts/measure_extract.py, local[4]) put sql at 47.9s vs arrow
-    81.5s for the mention scan and 67.3s vs 94.7s fused — the r1 rule
-    ('arrow' below 8 cores) was measured before the fused scan and no
-    longer holds anywhere. Both engines stay semantically identical and
-    parity-tested; 'arrow' remains the north-rule vectorized-UDF
-    reference implementation.
     """
     wh = Warehouse(warehouse_root)
     # schema gate (ADVICE r4): a pre-existing warehouse written by another
@@ -112,8 +103,6 @@ def run_pipeline(
     wh.set_meta("schema_version", SCHEMA_VERSION)
     res = PipelineResult()
     t0 = time.time()
-    if engine == "auto":
-        engine = "sql"
 
     def stage(name: str, build, **write_kw) -> DataFrame:
         if resume and wh.has(name):
@@ -195,7 +184,7 @@ def run_pipeline(
         # fused extraction: mention rows AND aka equivalence rows from ONE
         # corpus scan — the aka slice rides along as kind='aka' rows so
         # the equivalences stage never re-scans the full text corpus
-        mentions = extract.extract_mentions_fused(transcripts, engine=engine)
+        mentions = extract.extract_mentions_fused(transcripts)
         # NO repartition before the bucketed write (r3 shuffled the whole
         # mention stream here): the transcripts scan is bucket-partitioned
         # on conv_id, extraction/link preserve row placement (projections,

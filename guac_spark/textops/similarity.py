@@ -175,8 +175,7 @@ def _adaptive_n_bits(n_rows: int, target_bucket: int = 2) -> int:
 
 
 def cosine_near_pairs_lsh(
-    emb: DataFrame, threshold: float = 0.99, n_bits: int | None = None,
-    probe_hamming: int = 1
+    emb: DataFrame, threshold: float = 0.99, probe_hamming: int = 1
 ) -> DataFrame:
     """Near-dup pairs via hyperplane bucketing — the 100 TB path.
 
@@ -192,9 +191,9 @@ def cosine_near_pairs_lsh(
     cannot cost recall on scalar-copy near-dups (r7: outputs verified
     identical at n_bits 8/12/13/14 on every driver SF).
 
-    n_bits=None (default) sizes the signature to the corpus
-    (_adaptive_n_bits) — one count() job, the snapshot-summary lookup at
-    cluster scale.
+    The signature width is sized to the corpus (_adaptive_n_bits) from
+    one aggregate job that also counts distinct vec_ids — the
+    snapshot-summary lookup at cluster scale.
 
     Physical shape (r7, guide §2.3/§8): candidate (a, b) ID pairs are
     generated and deduplicated from the bucket table alone — the r6
@@ -203,13 +202,21 @@ def cosine_near_pairs_lsh(
     bytes of ids — and the embeddings are attached to the surviving
     pairs afterwards (two joins against the embedding relation;
     broadcast at bench scale, a plain id-keyed hash join at 100 TB).
-    Requires unique vec_ids (every driver SF; GUAC ids are unique by
-    construction) — under duplicate ids the old payload dedup silently
-    picked an arbitrary embedding per pair, which is strictly worse."""
+    Requires unique, non-null vec_ids (every driver SF; GUAC ids are
+    unique by construction) and raises ValueError otherwise: the
+    id-keyed attach joins would fan one candidate pair out to every
+    embedding sharing its id and return wrong pairs without an error."""
     from itertools import combinations
 
-    if n_bits is None:
-        n_bits = _adaptive_n_bits(emb.count())
+    n_rows, n_ids = emb.agg(
+        F.count(F.lit(1)), F.countDistinct("vec_id")
+    ).first()
+    if n_rows != n_ids:
+        raise ValueError(
+            f"cosine_near_pairs_lsh needs unique non-null vec_ids: {n_rows}"
+            f" rows but {n_ids} distinct ids"
+        )
+    n_bits = _adaptive_n_bits(n_rows)
     b = hyperplane_buckets(emb, n_bits=n_bits)
     masks = [0] + [
         sum(1 << i for i in c)

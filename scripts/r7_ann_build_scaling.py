@@ -18,6 +18,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -39,7 +40,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     corpora = {}
     for tag, n in (("small", N_SMALL), ("big", N_BIG)):
-        work = f"/dev/shm/r7_ann_build_{tag}"
+        # n in the name: a work dir left by a crashed run is only reused
+        # at the size it was built for
+        work = f"/dev/shm/r7_ann_build_{tag}_n{n}"
         cp = os.path.join(work, "embeddings.parquet")
         if not os.path.exists(os.path.join(work, "_READY")):
             synth_corpus(cp, n, NLIST)
@@ -62,9 +65,8 @@ def main() -> None:
             out[tag]["build_sec"].append(round(time.time() - t0, 2))
             cent.unpersist()
             shutil.rmtree(idx, ignore_errors=True)
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
     for tag, n in (("small", N_SMALL), ("big", N_BIG)):
-        m = med(out[tag]["build_sec"])
+        m = statistics.median(out[tag]["build_sec"])
         out[tag]["build_median_sec"] = m
         out[tag]["rows_per_sec"] = round(n / m, 1)
     out["time_ratio"] = round(

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -81,52 +83,55 @@ def noop(df) -> float:
 def main() -> None:
     spark = get_spark(app_name="r7_equiv_scaling_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    legs = {}
-    for tag, repl in (("small", REPL_SMALL), ("big", REPL_BIG)):
-        sf_dir = tempfile.mkdtemp(prefix=f"r7sc_{tag}_", dir="/dev/shm")
-        replicate(spark, repl, sf_dir)
-        wh = tempfile.mkdtemp(prefix=f"r7sc_wh_{tag}_", dir="/dev/shm")
-        res = pipeline.run_pipeline(spark, sf_dir, warehouse_root=wh,
-                                    engine="sql")
-        linked = res.tables["mentions_linked"]
-        adict = res.tables["alias_dict"]
-        unmatched = link.unmatched_surfaces(linked)
-        persons = adict.filter(F.col("kind") == "person")
-        legs[tag] = {
-            "repl": repl,
-            "turns": res.turns,
-            "linked": linked,
-            "adict": adict,
-            "n_unmatched": unmatched.count(),
-            "n_aliases": persons.count(),
-            "n_candidates": link.lsh_candidate_pairs(
-                unmatched.select("surface").distinct(),
-                persons.select("alias").distinct(),
-            ).count(),
+    root = tempfile.mkdtemp(prefix="r7sc_", dir="/dev/shm")
+    try:
+        legs = {}
+        for tag, repl in (("small", REPL_SMALL), ("big", REPL_BIG)):
+            sf_dir = replicate(spark, repl, os.path.join(root, tag))
+            wh = os.path.join(root, f"wh_{tag}")
+            res = pipeline.run_pipeline(spark, sf_dir, warehouse_root=wh)
+            linked = res.tables["mentions_linked"]
+            adict = res.tables["alias_dict"]
+            unmatched = link.unmatched_surfaces(linked)
+            persons = adict.filter(F.col("kind") == "person")
+            legs[tag] = {
+                "repl": repl,
+                "turns": res.turns,
+                "linked": linked,
+                "adict": adict,
+                "n_unmatched": unmatched.count(),
+                "n_aliases": persons.count(),
+                "n_candidates": link.lsh_candidate_pairs(
+                    unmatched.select("surface").distinct(),
+                    persons.select("alias").distinct(),
+                ).count(),
+            }
+        out = {
+            t: {k: v for k, v in leg.items() if k not in ("linked", "adict")}
+            for t, leg in legs.items()
         }
-    out = {
-        t: {k: v for k, v in leg.items() if k not in ("linked", "adict")}
-        for t, leg in legs.items()
-    }
-    for t in ("small", "big"):
-        out[t]["stage"] = []
-    for i in range(REPS):
         for t in ("small", "big"):
-            spark.sparkContext.setJobDescription(f"equiv {t} rep{i}")
-            out[t]["stage"].append(
-                noop(build_links(legs[t]["linked"], legs[t]["adict"]))
-            )
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-    for t in ("small", "big"):
-        out[t]["stage_median"] = med(out[t]["stage"])
-    out["time_ratio"] = round(
-        out["big"]["stage_median"] / out["small"]["stage_median"], 2
-    )
-    out["cand_ratio"] = round(
-        out["big"]["n_candidates"] / max(1, out["small"]["n_candidates"]), 2
-    )
-    print(json.dumps(out))
-    spark.stop()
+            out[t]["stage"] = []
+        for i in range(REPS):
+            for t in ("small", "big"):
+                spark.sparkContext.setJobDescription(f"equiv {t} rep{i}")
+                out[t]["stage"].append(
+                    noop(build_links(legs[t]["linked"], legs[t]["adict"]))
+                )
+        for t in ("small", "big"):
+            out[t]["stage_median"] = statistics.median(out[t]["stage"])
+        out["time_ratio"] = round(
+            out["big"]["stage_median"] / out["small"]["stage_median"], 2
+        )
+        out["cand_ratio"] = round(
+            out["big"]["n_candidates"]
+            / max(1, out["small"]["n_candidates"]),
+            2,
+        )
+        print(json.dumps(out))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        spark.stop()
 
 
 if __name__ == "__main__":

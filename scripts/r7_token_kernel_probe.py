@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
 import time
 from collections.abc import Iterator
@@ -161,21 +163,25 @@ def main() -> None:
     for p in parts[1:]:
         big = big.unionByName(p)
     path = "/dev/shm/r7_docs_repl.parquet"
-    big.repartition(64).write.mode("overwrite").parquet(path)
-    docs = dedup.staged_documents(spark.read.parquet(path))
-    n = docs.count()
+    try:
+        big.repartition(64).write.mode("overwrite").parquet(path)
+        docs = dedup.staged_documents(spark.read.parquet(path))
+        n = docs.count()
 
-    out = {"docs": n, "old": [], "new": []}
-    for i in range(REPS):
-        spark.sparkContext.setJobDescription(f"old band rep{i}")
-        out["old"].append(noop(mh.band_rows_df(docs, "doc_id", "text")))
-        spark.sparkContext.setJobDescription(f"new band rep{i}")
-        out["new"].append(noop(band_rows_df_tokens(docs, "doc_id", "text")))
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-    out["old_median"] = med(out["old"])
-    out["new_median"] = med(out["new"])
-    print(json.dumps(out))
-    spark.stop()
+        out = {"docs": n, "old": [], "new": []}
+        for i in range(REPS):
+            spark.sparkContext.setJobDescription(f"old band rep{i}")
+            out["old"].append(noop(mh.band_rows_df(docs, "doc_id", "text")))
+            spark.sparkContext.setJobDescription(f"new band rep{i}")
+            out["new"].append(
+                noop(band_rows_df_tokens(docs, "doc_id", "text"))
+            )
+        out["old_median"] = statistics.median(out["old"])
+        out["new_median"] = statistics.median(out["new"])
+        print(json.dumps(out))
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+        spark.stop()
 
 
 if __name__ == "__main__":

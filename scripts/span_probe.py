@@ -88,7 +88,7 @@ def main() -> None:
         ),
         # the SHIPPED guarded form (extract.surface_span_arr): concat-free
         # common path, prefix-check guard, exact-semantics fallback
-        "span_guarded": lambda: extract.extract_mentions(t, engine="sql"),
+        "span_guarded": lambda: extract.extract_mentions(t),
     }
     legs: dict[str, list[float]] = {k: [] for k in shapes}
     for i in range(args.runs):

@@ -97,10 +97,9 @@ def test_versioned_tool_mentions_link_to_version_node(spark):
          ("c1", 1, "also tool:unknown_thing@v7")],
         "conv_id string, turn_idx int, text string",
     )
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine)
-        got = {r["surface"] for r in m.filter("kind='tool'").collect()}
-        assert got == {"vec_db@v2", "vec_db", "unknown_thing@v7"}
+    m = extract.extract_mentions(t)
+    got = {r["surface"] for r in m.filter("kind='tool'").collect()}
+    assert got == {"vec_db@v2", "vec_db", "unknown_thing@v7"}
     adict = spark.createDataFrame(
         [("vec_db", "ent:tool/vec_db", "tool", 1.0)],
         "alias string, entity_id string, kind string, prior double",

@@ -1,26 +1,53 @@
-"""Extraction: engine parity (arrow vs sql), negative fixtures, staging dedupe."""
+"""Extraction: oracle parity, negative fixtures, staging dedupe."""
 
 from __future__ import annotations
 
 import datetime
 import os
 
-from guac_spark import corpus, extract
-from tests.conftest import SF_SMALL
+from pyspark.sql import functions as F
+
+from guac_spark import corpus, extract, oracle
+from tests.conftest import SF_SMALL, normalize_rows
 
 
 def _multiset(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_arrow_and_sql_engines_agree(spark):
-    t = corpus.transcripts(spark, SF_SMALL)
-    a = _multiset(extract.extract_mentions(t, engine="arrow"))
-    s = _multiset(extract.extract_mentions(t, engine="sql"))
-    assert a == s
-    aa = _multiset(extract.extract_aka_pairs(t, engine="arrow"))
-    ss = _multiset(extract.extract_aka_pairs(t, engine="sql"))
-    assert aa == ss
+def _aka_pairs(fused):
+    return sorted(
+        (r["surface"], r["surface_b"])
+        for r in fused.filter(F.col("kind") == "aka").collect()
+    )
+
+
+def test_fused_extraction_matches_oracle(spark, duck_small):
+    """The fused scan's mention slice equals the oracle's `mentions` CTE
+    and its aka slice the oracle's `aka` CTE (independent DuckDB/RE2
+    evaluation of the same grammar)."""
+    fused = extract.extract_mentions_fused(
+        corpus.transcripts(spark, SF_SMALL)
+    )
+    slices = {
+        "mentions": fused.filter(F.col("kind") != "aka").select(
+            "conv_id", "turn_idx", "kind", "surface", "span"
+        ),
+        "aka": fused.filter(F.col("kind") == "aka").select(
+            "conv_id",
+            "turn_idx",
+            F.col("surface").alias("surface_a"),
+            "surface_b",
+        ),
+    }
+    for cte, df in slices.items():
+        cur = duck_small.execute(
+            f"{oracle.KG_PRELUDE} SELECT {', '.join(df.columns)} FROM {cte}"
+        )
+        want = normalize_rows(df.columns, cur.fetchall())
+        got = normalize_rows(df.columns, [tuple(r) for r in df.collect()])
+        assert want, cte  # the fixture exercises both slices
+        assert got == want, cte
 
 
 def _mini(spark, texts):
@@ -35,15 +62,13 @@ def _mini(spark, texts):
 
 def test_no_mentions_emits_zero_rows_not_nulls(spark):
     t = _mini(spark, ["nothing to see here", "", "   ", "UPPER @Case-Bad"])
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine)
-        rows = m.collect()
-        # '@Case-Bad' starts uppercase -> no match under [a-z][a-z-]*
-        assert all(r["surface"] is not None for r in rows)
-        person = [r for r in rows if r["kind"] == "person"]
-        assert person == [] or all(
-            r["surface"] == "ase-bad" for r in person
-        )  # lowercase tail after 'C' only if regex engine matched mid-token
+    rows = extract.extract_mentions(t).collect()
+    # '@Case-Bad' starts uppercase -> no match under [a-z][a-z-]*
+    assert all(r["surface"] is not None for r in rows)
+    person = [r for r in rows if r["kind"] == "person"]
+    assert person == [] or all(
+        r["surface"] == "ase-bad" for r in person
+    )  # lowercase tail after 'C' only if regex engine matched mid-token
 
 
 def test_mixed_grammar_single_turn(spark):
@@ -52,28 +77,23 @@ def test_mixed_grammar_single_turn(spark):
         ["ping @ada-lovelace on #topic_3 via tool:tool_purchase >>0 "
          "and @grace-hopper aka @grace-hopperr"],
     )
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine)
-        kinds = {r["kind"] for r in m.collect()}
-        assert kinds == {"person", "topic", "tool", "reply"}
-        aka = extract.extract_aka_pairs(t, engine=engine).collect()
-        assert [(r["surface_a"], r["surface_b"]) for r in aka] == [
-            ("grace-hopper", "grace-hopperr")
-        ]
+    m = extract.extract_mentions(t)
+    kinds = {r["kind"] for r in m.collect()}
+    assert kinds == {"person", "topic", "tool", "reply"}
+    assert _aka_pairs(extract.extract_mentions_fused(t)) == [
+        ("grace-hopper", "grace-hopperr")
+    ]
 
 
 def test_multiple_aka_per_turn_both_engines(spark):
-    # two aka patterns in one turn: both engines must emit BOTH pairs
-    # (regression: the sql engine used to take only the first match)
+    # two aka patterns in one turn: the fused scan must emit BOTH pairs
+    # (regression: the JVM scan used to take only the first match)
     t = _mini(
         spark,
         ["@ada-lovelace aka @ada-l and @grace-hopper aka @grace-h done"],
     )
     want = [("ada-lovelace", "ada-l"), ("grace-hopper", "grace-h")]
-    for engine in ("arrow", "sql"):
-        aka = extract.extract_aka_pairs(t, engine=engine).collect()
-        got = sorted((r["surface_a"], r["surface_b"]) for r in aka)
-        assert got == want, engine
+    assert _aka_pairs(extract.extract_mentions_fused(t)) == want
 
 
 def test_staging_dedupe_by_content_hash(spark):
@@ -84,67 +104,31 @@ def test_staging_dedupe_by_content_hash(spark):
     assert deduped.count() == 2
 
 
-def test_triples_surface_shape(spark):
-    t = _mini(spark, ["@ada-lovelace aka @ada-lovelacee >>0"])
-    m = extract.extract_mentions(t)
-    a = extract.extract_aka_pairs(t)
-    tr = extract.triples_surface(m, a)
-    preds = {r["pred"] for r in tr.collect()}
-    assert preds == {"mentions", "replies_to", "same_as"}
-    reply = [r for r in tr.collect() if r["pred"] == "replies_to"][0]
-    assert reply["obj"] == "turn:c0:0"
-
-
 def test_fused_extraction_matches_separate(spark):
-    # the single-scan fused extraction must reproduce extract_mentions
-    # (non-aka slice) and extract_aka_pairs (aka slice), per engine, and
-    # the engines must agree with each other
-    from pyspark.sql import functions as F
-
+    # the fused scan's non-aka slice must reproduce extract_mentions
     t = corpus.transcripts(spark, SF_SMALL)
-    fused = {
-        eng: extract.extract_mentions_fused(t, engine=eng)
-        for eng in ("arrow", "sql")
-    }
-    want_m = _multiset(
-        extract.extract_mentions(t).select(
-            "conv_id", "turn_idx", "kind", "surface", "span"
-        )
+    cols = ["conv_id", "turn_idx", "kind", "surface", "span"]
+    got = _multiset(
+        extract.extract_mentions_fused(t)
+        .filter(F.col("kind") != "aka")
+        .select(*cols)
     )
-    want_a = _multiset(
-        extract.extract_aka_pairs(t).select(
-            "conv_id", "turn_idx", "surface_a", "surface_b"
-        )
-    )
-    for eng, f in fused.items():
-        got_m = _multiset(
-            f.filter(F.col("kind") != "aka").select(
-                "conv_id", "turn_idx", "kind", "surface", "span"
-            )
-        )
-        assert got_m == want_m, eng
-        got_a = _multiset(
-            f.filter(F.col("kind") == "aka").select(
-                "conv_id", "turn_idx", "surface", "surface_b"
-            )
-        )
-        assert got_a == want_a, eng
+    assert got == _multiset(extract.extract_mentions(t).select(*cols))
 
 
 def test_person_boundary_excludes_tool_version_suffix(spark):
     """ADVICE r3: 'tool:vec_db@v2' must not fabricate a person mention
     'v' — PERSON_RE requires a non-alphanumeric boundary (or start of
-    text) before '@', in both engines."""
+    text) before '@'."""
     t = _mini(
         spark,
         ["run tool:vec_db@v2 now", "@ada-lovelace leads", "see (@alan-turing)"],
     )
-    for engine in ("arrow", "sql"):
-        m = extract.extract_mentions(t, engine=engine).collect()
-        persons = sorted(r["surface"] for r in m if r["kind"] == "person")
-        assert persons == ["ada-lovelace", "alan-turing"], (engine, persons)
-        tools = [r["surface"] for r in m if r["kind"] == "tool"]
-        assert tools == ["vec_db@v2"]
+    m = extract.extract_mentions(t).collect()
+    persons = sorted(r["surface"] for r in m if r["kind"] == "person")
+    assert persons == ["ada-lovelace", "alan-turing"], persons
+    tools = [r["surface"] for r in m if r["kind"] == "tool"]
+    assert tools == ["vec_db@v2"]
 
 
 def test_events_rows_matches_count_on_single_and_multi_file(spark, tmp_path):
@@ -169,7 +153,6 @@ def test_sparse_event_ids_drop_no_transcript_rows(spark, tmp_path):
     corpus inner join (and the oracle, running identical SQL, cannot see
     the loss). Both engines must retain every turn and stay in parity."""
     import duckdb as _duckdb
-    from pyspark.sql import functions as F
 
     from guac_spark import corpus
 
